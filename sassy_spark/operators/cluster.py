@@ -8,12 +8,15 @@ iteration is two hash-join + aggregate rounds, converging in O(log n)
 iterations, which is what survives at 10^12 nodes (label propagation
 needs O(diameter)).
 
-Every iteration writes its edge set to ``{checkpoint_dir}/iter=NNN``
-(parquet) plus a ``_meta.json`` with row count, a content hash, and
-lineage (iteration number, parent). ``connected_components`` resumes
-from the latest complete checkpoint if present — the sandbox stand-in
-for Iceberg snapshot checkpointing (the Iceberg runtime jar is not in
-this environment; the snapshot/manifest discipline is the same).
+With a checkpoint dir, every iteration's edge set is a snapshot at
+``{checkpoint_dir}/iter=NNN`` in the shared format of
+:mod:`.staging` (parquet data, then a ``_meta.json`` with rows, content
+hash, input fingerprint, part-file lineage, ``iteration`` and
+``converged``). ``connected_components`` resumes from the newest
+iteration that verifies and rebuilds from the input edges when none
+does — the stand-in for Iceberg snapshot checkpointing (the Iceberg
+runtime jar is not available; the snapshot/manifest discipline is the
+same).
 
 Node ids are the url strings themselves: component representative = the
 lexicographically smallest url. Strings keep ids collision-free at any
@@ -23,11 +26,19 @@ dominates (noted trade-off).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .staging import (
+    commit_snapshot,
+    content_state,
+    fs_list_dirs,
+    resume_snapshot,
+    stage_observed,
+    write_snapshot,
+)
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -77,85 +88,29 @@ def small_star(edges: DataFrame) -> DataFrame:
     return a.union(b).where(F.col("src") != F.col("dst")).distinct()
 
 
-def _edge_state(df: DataFrame) -> tuple[int, int]:
-    row = df.select(
-        F.count("*").alias("n"),
-        # order-insensitive content hash; bit_xor can't overflow (ANSI-safe)
-        F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
-# --- checkpoint meta IO through the Hadoop FileSystem API: data and meta
-# must live on the SAME filesystem (HDFS/S3/local) or resumability breaks
-# the moment the pipeline runs off the driver's disk
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(conf), hpath, jvm
-
-
-def fs_write_text(spark: SparkSession, path: str, content: str) -> None:
-    fs, hpath, _ = _hadoop_fs(spark, path)
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(content.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def fs_read_text(spark: SparkSession, path: str) -> str | None:
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return None
-    stream = fs.open(hpath)
-    try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        lines = []
-        line = reader.readLine()
-        while line is not None:
-            lines.append(line)
-            line = reader.readLine()
-        return "\n".join(lines)
-    finally:
-        stream.close()
-
-
-def fs_list_dirs(spark: SparkSession, path: str) -> list[str]:
-    fs, hpath, _ = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return []
-    return [
-        st.getPath().getName()
-        for st in fs.listStatus(hpath)
-        if st.isDirectory()
-    ]
+def _iter_path(checkpoint_dir: str, it: int) -> str:
+    return os.path.join(checkpoint_dir, f"iter={it:03d}")
 
 
 def _latest_checkpoint(
-    spark: SparkSession, checkpoint_dir: str
-) -> tuple[int, dict] | None:
-    if not checkpoint_dir:
-        return None
-    best = None
-    for name in fs_list_dirs(spark, checkpoint_dir):
-        if not name.startswith("iter="):
-            continue
-        raw = fs_read_text(
-            spark, os.path.join(checkpoint_dir, name, "_meta.json")
-        )
-        if raw is None:
-            continue  # incomplete write — ignore (atomicity: meta last)
-        meta = json.loads(raw)
-        it = int(meta["iteration"])
-        if best is None or it > best[0]:
-            best = (it, meta)
-    return best
+    spark: SparkSession, checkpoint_dir: str, fingerprint: dict
+) -> tuple[int, DataFrame, dict] | None:
+    """(iteration, frame, meta) of the newest iteration snapshot that
+    verifies against ``fingerprint``; torn, damaged or stale iterations
+    are skipped (an older verified iteration is still a valid restart)."""
+    its = sorted(
+        (
+            int(name[5:])
+            for name in fs_list_dirs(spark, checkpoint_dir)
+            if name.startswith("iter=") and name[5:].isdigit()
+        ),
+        reverse=True,
+    )
+    for it in its:
+        got = resume_snapshot(spark, _iter_path(checkpoint_dir, it), fingerprint)
+        if got is not None:
+            return (it, *got)
+    return None
 
 
 def _encode_nodes(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -281,14 +236,15 @@ def connected_components(
             .select(F.col("u").alias("url"), F.col("c").alias("cluster_id"))
         )
     spark = edges.sparkSession
+    orig = edges.select(F.col(src), F.col(dst))
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).where(
         F.col(src) != F.col(dst)
     )
     start_iter = 0
     prev_state = None
     # input fingerprint: resuming a checkpoint produced from DIFFERENT
-    # input edges (or a different parameter set) would silently return
-    # stale clusters — the fingerprint invalidates such checkpoints
+    # input edges would silently return stale clusters — the fingerprint
+    # invalidates such checkpoints
     fingerprint = None
     e_in_cached = None
     if checkpoint_dir:
@@ -299,40 +255,32 @@ def connected_components(
         # released as soon as the first iteration checkpoint materializes
         e = e.persist(StorageLevel.MEMORY_AND_DISK)
         e_in_cached = e
-        n0, h0 = _edge_state(e)
+        n0, h0 = content_state(e)
         fingerprint = {"n_edges_in": n0, "edge_hash_in": h0}
-    resumed = (
-        _latest_checkpoint(spark, checkpoint_dir) if checkpoint_dir else None
-    )
-    if resumed is not None and resumed[1].get("fingerprint") != fingerprint:
-        resumed = None  # stale checkpoint from other inputs: rebuild
-    if resumed is not None:
-        it, meta = resumed
-        e = spark.read.parquet(
-            os.path.join(checkpoint_dir, f"iter={it:03d}", "edges")
-        )
-        # verify checkpoint integrity against its recorded state before
-        # trusting it (torn/decayed files resume as wrong clusters)
-        n_ck, h_ck = _edge_state(e)
-        if (n_ck, h_ck) != (meta["n_edges"], meta["edge_hash"]):
-            resumed = None
-            e = edges.select(
-                F.col(src).alias("src"), F.col(dst).alias("dst")
-            ).where(F.col(src) != F.col(dst)).persist()
-            e_in_cached = e
-        else:
-            start_iter = it + 1
-            prev_state = (meta["n_edges"], meta["edge_hash"])
+        resumed = _latest_checkpoint(spark, checkpoint_dir, fingerprint)
+        if resumed is not None:
+            it, e, meta = resumed
+            e_in_cached.unpersist()
+            e_in_cached = None
             if meta.get("converged"):
-                if e_in_cached is not None:
-                    e_in_cached.unpersist()
-                return _labels_from_stars(e, edges, src)
+                return _labels_from_stars(e, orig, src)
+            start_iter = it + 1
+            prev_state = (meta["rows"], meta["content_hash"])
 
-    from pyspark.sql import Observation
+    def write_iteration(cur: DataFrame, it: int) -> tuple[DataFrame, tuple]:
+        """One job: an iteration snapshot (committed by the caller once
+        convergence is known) or a RAM-scratch stage. Either truncates
+        lineage (plan growth is the classic iterative-algorithm failure
+        mode on Spark) without leaving RDDs in executor storage."""
+        if checkpoint_dir:
+            return write_snapshot(cur, _iter_path(checkpoint_dir, it))
+        return stage_observed(cur, None, f"cc_iter{it:03d}")
 
-    from .staging import stage_parquet
-
-    orig = edges.select(F.col(src), F.col(dst))
+    def commit(it: int, state: tuple[int, int], converged: bool) -> None:
+        commit_snapshot(
+            spark, _iter_path(checkpoint_dir, it), state, fingerprint,
+            iteration=it, converged=converged,
+        )
 
     def finish_small(cur: DataFrame, next_it: int) -> DataFrame:
         """Collect the (already materialized, <= threshold) edge set and
@@ -345,11 +293,8 @@ def connected_components(
             rows, spark, cur.select("src", "dst").schema
         )
         if checkpoint_dir:
-            assign = _checkpoint(assign, checkpoint_dir, next_it, spark)
-            n2, h2 = _edge_state(assign)
-            _write_meta(
-                spark, checkpoint_dir, next_it, n2, h2, True, fingerprint
-            )
+            assign, state = write_iteration(assign, next_it)
+            commit(next_it, state, True)
         if e_in_cached is not None:
             e_in_cached.unpersist()
             e_in_cached = None
@@ -367,7 +312,7 @@ def connected_components(
         if known_n is not None and known_n <= small_graph_threshold:
             return finish_small(e, start_iter)
 
-    if not checkpoint_dir and start_iter == 0:
+    if not checkpoint_dir:
         # Materialize the input edge set ONCE to a RAM-scratch parquet,
         # with its count observed on the same job (guide §2.4: remove
         # repeated subtree execution; §1.5-style single action). The
@@ -383,14 +328,11 @@ def connected_components(
         # round before the gate could see a count). Self-loops are kept
         # in the staged frame so the label join still emits rows for
         # self-loop-only nodes, exactly as before.
-        obs_in = Observation("cc_input_state")
-        staged_in = stage_parquet(
-            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .observe(obs_in, F.count(F.lit(1)).alias("n")),
+        staged_in, (n_in, _) = stage_observed(
+            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
             None,
             "cc_input",
         )
-        n_in = int(obs_in.get["n"])
         e = staged_in.where(F.col("src") != F.col("dst"))
         orig = staged_in
         if small_graph_threshold and n_in <= small_graph_threshold:
@@ -405,71 +347,25 @@ def connected_components(
         # two star rounds per check: an UNmaterialized second round
         # re-executes round 1's subplan for every self-join reference,
         # measured 2.7x slower at sf0.1).
-        obs = Observation(f"cc_state_{it}")
-        e2 = small_star(large_star(e)).observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)
-            ).alias("h"),
-        )
-        if checkpoint_dir:
-            e = _checkpoint(e2, checkpoint_dir, it, spark)
-        else:
-            # RAM-scratch parquet stage: truncates lineage (plan growth is
-            # the classic iterative-algorithm failure mode on Spark)
-            # without leaving localCheckpoint RDDs in executor storage
-            e = stage_parquet(e2, None, f"cc_iter{it:03d}")
-        vals = obs.get
-        n, h = int(vals["n"]), int(vals["h"])
+        e, state = write_iteration(small_star(large_star(e)), it)
         if e_in_cached is not None:
             e_in_cached.unpersist()  # first iteration materialized — the
             e_in_cached = None  # cached input edge set is no longer read
-        converged = prev_state == (n, h)
+        converged = prev_state == state
         if checkpoint_dir:
-            _write_meta(spark, checkpoint_dir, it, n, h, converged, fingerprint)
+            commit(it, state, converged)
         if converged:
             break
-        prev_state = (n, h)
+        prev_state = state
         # the contracted edge set now fits the driver: one collect +
         # union-find replaces every remaining star round (each costs ~5
         # shuffles + a staging write regardless of size)
-        if small_graph_threshold and n <= small_graph_threshold:
+        if small_graph_threshold and state[0] <= small_graph_threshold:
             return finish_small(e, it + 1)
 
     if e_in_cached is not None:
         e_in_cached.unpersist()
     return _labels_from_stars(e, orig, src)
-
-
-def _checkpoint(e: DataFrame, checkpoint_dir: str, it: int, spark) -> DataFrame:
-    path = os.path.join(checkpoint_dir, f"iter={it:03d}", "edges")
-    e.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def _write_meta(
-    spark: SparkSession,
-    checkpoint_dir: str,
-    it: int,
-    n: int,
-    h: int,
-    converged: bool,
-    fingerprint: dict | None,
-):
-    meta = {
-        "iteration": it,
-        "n_edges": n,
-        "edge_hash": h,
-        "converged": converged,
-        "parent": it - 1,
-        "fingerprint": fingerprint,
-    }
-    fs_write_text(
-        spark,
-        os.path.join(checkpoint_dir, f"iter={it:03d}", "_meta.json"),
-        json.dumps(meta),
-    )
 
 
 def _labels_from_stars(stars: DataFrame, orig_edges: DataFrame, src: str) -> DataFrame:

@@ -31,7 +31,7 @@ the same shape as sassy v2's "one text pass, patterns in SIMD lanes"
 batch vectorization instead of AVX lanes. Case-insensitive search lowers
 the text JVM-side (Catalyst ``lower()`` before the Arrow transfer — also
 shrinks the payload) and the patterns once on the driver. Lanes are
-chunked (SASSY_SEARCH_LANES, default 4096) after length-sorting the
+chunked (``MAX_LANES`` = 4096 per kernel call) after length-sorting the
 batch, bounding worker memory at O(lanes x band) regardless of document
 length or pattern count.
 """
@@ -58,6 +58,10 @@ MATCH_SCHEMA = (
 # (use linkage.score_pairs / a join) — fail fast instead of OOMing the
 # driver on collect()
 MAX_PATTERNS = int(os.environ.get("SASSY_MAX_PATTERNS", "100000"))
+
+# (pattern x text) lanes per kernel call, bounding worker memory at
+# O(lanes x band words) whatever the document length or pattern count
+MAX_LANES = 4096
 
 
 def search(
@@ -316,7 +320,6 @@ def _make_runner(
     from ..kernel.profiles import resolve_profile
 
     classes = resolve_profile(profile)
-    max_lanes = int(os.environ.get("SASSY_SEARCH_LANES", "4096"))
     base_mode = "all" if mode == "all_alignments" else mode
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -361,8 +364,8 @@ def _make_runner(
             tb_orig: list = []
             tb_idx: list = []
             # pattern-major lanes over bounded text chunks: worker memory
-            # is O(max_lanes x band words), independent of corpus shape
-            texts_per_chunk = max(1, max_lanes // n_p)
+            # is O(MAX_LANES x band words), independent of corpus shape
+            texts_per_chunk = max(1, MAX_LANES // n_p)
             for lo in range(0, len(txts), texts_per_chunk):
                 chunk = txts[lo : lo + texts_per_chunk]
                 chunk_orig = origs_all[lo : lo + texts_per_chunk]

@@ -10,20 +10,33 @@ RAM-backed session temp dir) and read back, so every upstream cache can
 be unpersisted immediately after the write and an operator call leaves
 no persisted RDDs behind.
 
-On a real cluster the temp root is per-executor NVMe / HDFS scratch; in
-this sandbox it is /dev/shm (same RAM the persist would have used, but
-with deterministic lifetime — temp dirs are removed at interpreter
-exit).
+On a real cluster the temp root is per-executor NVMe / HDFS scratch;
+locally it is /dev/shm (same RAM the persist would have used, but with
+deterministic lifetime — temp dirs are removed at interpreter exit).
+
+It also owns the one resumable snapshot format, used by the link stages
+(``stage=<name>``) and the connected-components iterations
+(``iter=NNN``): ``<dir>/data`` parquet written by ONE job, whose rows and
+order-insensitive content hash ride on that job as an Observation; then
+``<dir>/_meta.json``, written last, with rows, content_hash, the
+caller's fingerprint (input identity + parameters), ``parts`` (the
+per-partition lineage: part-file names and sizes from the Hadoop FS
+listing) and caller fields. A snapshot resumes only if its meta parses,
+the fingerprint and part files match, and a re-scan reproduces rows and
+hash; anything else (torn write, truncated meta, lost or decayed data,
+other inputs) reads as "no snapshot" and the caller rebuilds.
 """
 
 from __future__ import annotations
 
 import atexit
+import json
 import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 _TEMP_DIRS: list[str] = []
 
@@ -64,4 +77,161 @@ def stage_parquet(
         path = tempfile.mkdtemp(prefix=f"sassy_{prefix}_", dir=scratch_root())
         _TEMP_DIRS.append(path)
     df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    # the known schema spares the footer-inference job of a bare read
+    return spark.read.schema(df.schema).parquet(path)
+
+
+def _state_exprs(df: DataFrame) -> tuple:
+    cols = ", ".join(f"`{c}`" for c in df.columns)
+    return (
+        F.count(F.lit(1)).alias("rows"),
+        # order-insensitive content hash; bit_xor can't overflow (ANSI-safe)
+        F.coalesce(F.expr(f"bit_xor(xxhash64({cols}))"), F.lit(0)).alias(
+            "content_hash"
+        ),
+    )
+
+
+def content_state(df: DataFrame) -> tuple[int, int]:
+    """(rows, content hash) of ``df`` in one aggregation job."""
+    row = df.select(*_state_exprs(df)).collect()[0]
+    return int(row["rows"]), int(row["content_hash"])
+
+
+def stage_observed(
+    df: DataFrame, path: str | None = None, prefix: str = "stage"
+) -> tuple[DataFrame, tuple[int, int]]:
+    """:func:`stage_parquet` plus the frame's (rows, content hash),
+    observed on the write job itself instead of a second scan."""
+    obs = Observation()
+    back = stage_parquet(df.observe(obs, *_state_exprs(df)), path, prefix)
+    vals = obs.get
+    return back, (int(vals["rows"]), int(vals["content_hash"]))
+
+
+# --- Hadoop FileSystem IO: data and meta must live on the SAME filesystem
+# (HDFS/S3/local) or resumability breaks the moment the pipeline runs off
+# the driver's disk
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(conf), hpath, jvm
+
+
+def fs_write_text(spark: SparkSession, path: str, content: str) -> None:
+    fs, hpath, _ = _hadoop_fs(spark, path)
+    out = fs.create(hpath, True)
+    try:
+        out.write(bytearray(content.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def fs_read_text(spark: SparkSession, path: str) -> str | None:
+    fs, hpath, jvm = _hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    stream = fs.open(hpath)
+    try:
+        reader = jvm.java.io.BufferedReader(
+            jvm.java.io.InputStreamReader(stream, "UTF-8")
+        )
+        lines = []
+        line = reader.readLine()
+        while line is not None:
+            lines.append(line)
+            line = reader.readLine()
+        return "\n".join(lines)
+    finally:
+        stream.close()
+
+
+def _list_status(spark: SparkSession, path: str) -> list:
+    fs, hpath, _ = _hadoop_fs(spark, path)
+    return list(fs.listStatus(hpath)) if fs.exists(hpath) else []
+
+
+def fs_list_dirs(spark: SparkSession, path: str) -> list[str]:
+    return [
+        st.getPath().getName()
+        for st in _list_status(spark, path)
+        if st.isDirectory()
+    ]
+
+
+def _part_files(spark: SparkSession, data_dir: str) -> list[list]:
+    """[name, bytes] of every data file under ``data_dir``, by name
+    (``_SUCCESS`` and ``.crc`` sidecars excluded)."""
+    return sorted(
+        [st.getPath().getName(), int(st.getLen())]
+        for st in _list_status(spark, data_dir)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    )
+
+
+# --- snapshots: see the module docstring for the format
+
+
+def write_snapshot(
+    df: DataFrame, path: str
+) -> tuple[DataFrame, tuple[int, int]]:
+    """Write ``df`` to ``<path>/data`` in one job; returns the
+    parquet-backed frame and its observed (rows, content hash). The
+    snapshot is not resumable until :func:`commit_snapshot` runs."""
+    return stage_observed(df, os.path.join(path, "data"))
+
+
+def commit_snapshot(
+    spark: SparkSession,
+    path: str,
+    state: tuple[int, int],
+    fingerprint,
+    **fields,
+) -> None:
+    """Write ``<path>/_meta.json`` (last, so a torn write never resumes)
+    with the state, fingerprint, part-file lineage and caller fields."""
+    meta = {
+        "rows": state[0],
+        "content_hash": state[1],
+        "fingerprint": fingerprint,
+        "parts": _part_files(spark, os.path.join(path, "data")),
+        **fields,
+    }
+    fs_write_text(spark, os.path.join(path, "_meta.json"), json.dumps(meta))
+
+
+def resume_snapshot(
+    spark: SparkSession, path: str, fingerprint
+) -> tuple[DataFrame, dict] | None:
+    """The verified parquet-backed frame and its meta, or None when the
+    snapshot is missing, damaged, or was written for another fingerprint."""
+    data = os.path.join(path, "data")
+    try:
+        raw = fs_read_text(spark, os.path.join(path, "_meta.json"))
+        if raw is None:
+            return None
+        meta = json.loads(raw)
+        if (
+            meta.get("fingerprint") != fingerprint
+            or meta.get("parts") != _part_files(spark, data)
+        ):
+            return None
+        back = spark.read.parquet(data)
+        if content_state(back) != (meta["rows"], meta["content_hash"]):
+            return None
+    except Exception:  # noqa: BLE001 — truncated meta, unreadable parquet
+        return None
+    return back, meta
+
+
+def snapshot(df: DataFrame, path: str, fingerprint) -> DataFrame:
+    """Resume the snapshot at ``path`` if it verifies, else write it."""
+    resumed = resume_snapshot(df.sparkSession, path, fingerprint)
+    if resumed is not None:
+        return resumed[0]
+    back, state = write_snapshot(df, path)
+    commit_snapshot(df.sparkSession, path, state, fingerprint)
+    return back

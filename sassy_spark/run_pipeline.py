@@ -8,8 +8,9 @@
         --k-frac 0.05
 
 Resumable: reruns skip completed blocking/pair/score stages and resume
-connected components from the last finished iteration (see
-operators/linkage._stage and operators/cluster checkpoints). When no
+connected components from the last finished iteration — both are
+snapshots in the one format of operators/staging.py, under
+<checkpoint>/stage=<name> and <checkpoint>/cc/iter=NNN. When no
 --input is given, generates a deterministic synthetic corpus (for
 dry-runs/CI).
 
@@ -78,20 +79,6 @@ def main() -> None:
         n_hashes=args.n_hashes,
         checkpoint_dir=args.checkpoint,
     )
-    # same fingerprint discipline as the inner stages: a rerun against
-    # different input/params rebuilds instead of reusing stale output
-    fingerprint = {
-        "input_plan": int(pages.semanticHash()),
-        "params": {
-            "k": args.k,
-            "k_frac": args.k_frac,
-            "text_col": args.text_col,
-            "max_block_size": args.max_block_size,
-            "bands": args.bands,
-            "n_hashes": args.n_hashes,
-        },
-    }
-    scored = linkage._stage(scored, args.checkpoint, "scored", fingerprint)
     n_scored = scored.count()
     dt = time.time() - t
     metrics["stages"]["score"] = {
@@ -121,7 +108,7 @@ def main() -> None:
 
     # metrics go through the Hadoop FS API so they land on the same
     # filesystem as the checkpoints (HDFS/S3 safe, not driver-local)
-    from sassy_spark.operators.cluster import fs_write_text
+    from sassy_spark.operators.staging import fs_write_text
 
     fs_write_text(
         spark,

@@ -203,6 +203,52 @@ def test_cc_small_graph_finisher_identical_labels(spark, seed, tmp_path):
     assert a == b == c
 
 
+def _damage_snapshot(snap_dir, damage):
+    """Truncate a snapshot's _meta.json (dropping its .crc sidecar, or
+    the local FS would raise a checksum error before the parse does) or
+    delete its data directory."""
+    import shutil
+
+    if damage == "truncated_meta":
+        meta = snap_dir / "_meta.json"
+        raw = meta.read_bytes()
+        meta.write_bytes(raw[: len(raw) // 2])
+        (snap_dir / "._meta.json.crc").unlink(missing_ok=True)
+    else:
+        (data,) = [d for d in snap_dir.iterdir() if d.is_dir()]
+        shutil.rmtree(data)
+
+
+@pytest.mark.parametrize("damage", ["truncated_meta", "deleted_data"])
+def test_damaged_snapshot_rebuilds(spark, tmp_path, damage):
+    """A damaged snapshot reads as "no snapshot" for both callers of the
+    shared resume: connected_components rebuilds from the input edges and
+    link() rebuilds the stage, each returning the fresh result instead of
+    raising."""
+    nodes, edges = _random_graph(9)
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    fresh = {r["url"]: r["cluster_id"] for r in connected_components(df).collect()}
+    ck = tmp_path / "cc"
+    connected_components(df, checkpoint_dir=str(ck)).collect()
+    _damage_snapshot(ck / "iter=000", damage)
+    got = {
+        r["url"]: r["cluster_id"]
+        for r in connected_components(df, checkpoint_dir=str(ck)).collect()
+    }
+    assert got == fresh
+
+    from sassy_spark.operators.linkage import link
+    from sassy_spark.sources.pages import generate_pages
+
+    pages = generate_pages(spark, 120, seed=3).drop("cluster_id").cache()
+    lk = tmp_path / "link"
+    first = set(link(pages, k=None, k_frac=0.05, checkpoint_dir=str(lk)).collect())
+    _damage_snapshot(lk / "stage=scored", damage)
+    again = set(link(pages, k=None, k_frac=0.05, checkpoint_dir=str(lk)).collect())
+    pages.unpersist()
+    assert again == first and first
+
+
 def test_label_propagation_bounded_hops(spark):
     from sassy_spark.operators.cluster import label_propagation
 

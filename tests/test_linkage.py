@@ -295,6 +295,64 @@ def test_run_pipeline_table_input(spark, tmp_path, monkeypatch):
     metrics = json.loads((tmp_path / "ck" / "metrics.json").read_text())
     assert metrics["n_pages"] == n_pages
     assert metrics["stages"]["score"]["pairs_scored"] >= 0
+    # the layout the benchmark reads: the scored pairs at stage=scored/data
+    scored = spark.read.parquet(str(tmp_path / "ck" / "stage=scored" / "data"))
+    assert scored.count() == metrics["stages"]["score"]["pairs_scored"]
+    # a rerun on the same checkpoint resumes every snapshot untouched
+    before = _snapshot_files(tmp_path / "ck")
+    assert any("stage=" in p for p in before)
+    assert any("iter=" in p for p in before)
+    run_pipeline.main()
+    assert _snapshot_files(tmp_path / "ck") == before
+
+
+def _snapshot_files(ck):
+    """(size, mtime) of every file under the stage=* and iter=* snapshot
+    dirs of a run_pipeline checkpoint."""
+    return {
+        str(p.relative_to(ck)): (p.stat().st_size, p.stat().st_mtime_ns)
+        for p in ck.rglob("*")
+        if p.is_file()
+        and any(part.startswith(("stage=", "iter=")) for part in p.parts)
+    }
+
+
+def _run_pipeline(spark, monkeypatch, inp, out, ck):
+    """run_pipeline.main on a parquet input; returns the entity rows."""
+    import sys as _sys
+
+    from sassy_spark import run_pipeline
+
+    monkeypatch.setattr(
+        _sys,
+        "argv",
+        ["run_pipeline", "--input", inp, "--output", out,
+         "--checkpoint", ck, "--k-frac", "0.05"],
+    )
+    run_pipeline.main()
+    return set(spark.read.parquet(out).collect())
+
+
+def test_run_pipeline_rewritten_input_rebuilds(spark, tmp_path, monkeypatch):
+    """Input parquet rewritten at the SAME path with other content: a
+    rerun on the same checkpoint must rebuild every stage, giving the
+    entities of a fresh run (the plan hash of the read does not change,
+    only the content fingerprint does)."""
+    from sassy_spark.sources.pages import generate_pages
+
+    inp = str(tmp_path / "pages.parquet")
+    ck = str(tmp_path / "ck")
+    generate_pages(spark, 150, seed=3).drop("cluster_id").write.parquet(inp)
+    _run_pipeline(spark, monkeypatch, inp, str(tmp_path / "out1"), ck)
+    generate_pages(spark, 150, seed=4).drop("cluster_id").write.mode(
+        "overwrite"
+    ).parquet(inp)
+    spark.catalog.clearCache()
+    resumed = _run_pipeline(spark, monkeypatch, inp, str(tmp_path / "out2"), ck)
+    fresh = _run_pipeline(
+        spark, monkeypatch, inp, str(tmp_path / "out3"), str(tmp_path / "ck_fresh")
+    )
+    assert resumed == fresh
 
 
 def test_link_leaves_no_persisted_rdds(pages, spark):
