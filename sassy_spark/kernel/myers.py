@@ -28,7 +28,11 @@ Semantics intentionally mirror the reference (RagnarGrootKoerkamp/sassy):
   (only_best_match, src/search.rs:442-445,1392-1455: min cost, rightmost
   end tie-break). Streaming + row-banded: memory is O(batch x band), not
   O(batch x text) — the batch analog of sassy's early row termination
-  (src/search.rs:1131-1162).
+  (src/search.rs:1131-1162). The column loop only advances the
+  recurrence; per 64-column block one cumsum over the tracked ph/mh bits
+  gives the row-m costs, the minima machine runs on hot lanes only,
+  lanes run longest text first so ended lanes drop out of the scanned
+  prefix, and each distinct pattern/text object is set up once.
 * overhang (``alpha``)    — the pattern may hang over either text end at
   cost ``floor(alpha * overhang)``, capped at ``max_overhang`` chars
   (reference src/search.rs:231-248, init_deltas_for_overshoot
@@ -386,18 +390,39 @@ def _overhang_penalty(o, alpha: float, mo: int):
 
 def _column_values(pv, mv, hw: int) -> np.ndarray:
     """D[r+1][j] for bit rows r in 0..(hw+1)*64-1, anchored at the known
-    semiglobal top row D[0][j] = 0. pv/mv are (W, B); returns (B, R) int64.
+    semiglobal top row D[0][j] = 0. pv/mv are (W, B); returns (B, R) int32.
     Done only at 64-column boundaries, so the amortized cost is < 1 op per
     column per word (the batch analog of sassy's prefix_min lane scan,
     reference src/minima.rs:62-92)."""
     sel = slice(0, hw + 1)
     pbits = np.unpackbits(
         np.ascontiguousarray(pv[sel].T).view(np.uint8), axis=1, bitorder="little"
-    ).astype(np.int64)
+    )
     mbits = np.unpackbits(
         np.ascontiguousarray(mv[sel].T).view(np.uint8), axis=1, bitorder="little"
-    ).astype(np.int64)
-    return np.cumsum(pbits - mbits, axis=1)
+    )
+    return np.cumsum(np.subtract(pbits, mbits, dtype=np.int8), axis=1, dtype=np.int32)
+
+
+def _distinct_symbols(seqs) -> tuple[list[np.ndarray], np.ndarray]:
+    """Symbol arrays of the distinct objects in ``seqs`` (by identity) and
+    each element's index into them. The search runner repeats each
+    pattern object across its texts and each text object across the
+    patterns, so each distinct sequence is encoded, padded and compacted
+    once. ``alive`` pins every distinct object, so no ``id`` can be reused
+    while the call runs."""
+    first: dict[int, int] = {}
+    alive: list = []
+    uniq: list[np.ndarray] = []
+    idx = np.empty(len(seqs), dtype=np.intp)
+    for i, s in enumerate(seqs):
+        u = first.get(id(s))
+        if u is None:
+            u = first[id(s)] = len(uniq)
+            uniq.append(_as_symbols(s))
+            alive.append(s)
+        idx[i] = u
+    return uniq, idx
 
 
 def semiglobal_search(
@@ -430,6 +455,16 @@ def semiglobal_search(
     per 64-column block, with y re-derived exactly at block boundaries by
     unpacking the delta masks. Memory is O(B x band_words); no
     (B, text_len) score matrix is ever materialized.
+
+    Per 64-column block the column loop only advances the recurrence: it
+    keeps the ph/mh words that hold each lane's tracked row, and one
+    cumsum over their row bits at block end gives the block's row-m
+    costs. Lanes run longest text first, so the lanes whose text has
+    ended are a suffix and each block scans only the live prefix. The
+    minima plateau machine (and the ``best`` argmax) runs only on hot
+    lanes, those with a cost <= k in the block or a carried run <= k.
+    Each distinct pattern and text object is encoded once; lanes address
+    its peq row and text column.
     """
     bsz = len(patterns)
     if alpha is not None and not (0.0 <= alpha <= 1.0):
@@ -440,10 +475,10 @@ def semiglobal_search(
     if bsz == 0:
         return []
     k = int(k)
-    psyms = [_as_symbols(p) for p in patterns]
-    tsyms = [_as_symbols(t) for t in texts]
-    mlens_all = np.array([len(p) for p in psyms], dtype=np.int64)
-    tlens_all = np.array([len(t) for t in tsyms], dtype=np.int64)
+    pu, pidx = _distinct_symbols(patterns)
+    tu, tidx = _distinct_symbols(texts)
+    mlens_all = np.array([len(p) for p in pu], dtype=np.int64)[pidx]
+    tlens_all = np.array([len(t) for t in tu], dtype=np.int64)[tidx]
 
     out: list[tuple[np.ndarray, np.ndarray]] = [
         (np.zeros(0, np.int64), np.zeros(0, np.int32)) for _ in range(bsz)
@@ -465,6 +500,9 @@ def semiglobal_search(
     lanes = np.nonzero((mlens_all > 0) & (tlens_all > 0))[0]
     if len(lanes) == 0:
         return out
+    # longest text first: lanes whose text has ended form a suffix, so a
+    # block scans the prefix [:n_live] (results still go to out[lanes[li]])
+    lanes = lanes[np.argsort(-tlens_all[lanes], kind="stable")]
 
     mlens = mlens_all[lanes]
     tlens = tlens_all[lanes]
@@ -473,12 +511,17 @@ def semiglobal_search(
     n_max = int(tlens.max())
     w_count = (m_max + 63) // 64
 
-    pmat0, _ = _pad_syms([psyms[i] for i in lanes])
-    tmat0 = np.zeros((n_max, b), dtype=np.uint32)  # column-major scan
-    for row, i in enumerate(lanes):
-        tmat0[: tlens[row], row] = tsyms[i]
+    # one padded row per distinct pattern, one column per distinct text;
+    # lane li reads peq row pat_of[li] and text column text_of[li]
+    pset, pat_of = np.unique(pidx[lanes], return_inverse=True)
+    tset, text_of = np.unique(tidx[lanes], return_inverse=True)
+    pmat0, _ = _pad_syms([pu[i] for i in pset])
+    tmat0 = np.zeros((n_max, len(tset)), dtype=np.uint32)  # column-major scan
+    for col, i in enumerate(tset):
+        tmat0[: len(tu[i]), col] = tu[i]
     (pmat, tmat), alphabet, originals = _compact_mats([pmat0, tmat0])
     compat = _compat_or_none(originals, classes)
+    pat_base = pat_of.astype(np.int64) * alphabet
 
     mo = int(max_overhang) if max_overhang is not None else (1 << 40)
 
@@ -494,9 +537,7 @@ def semiglobal_search(
         )
         for w in range(w_count):
             bits = d0[w * 64 : w * 64 + 64].astype(np.uint64)
-            word = np.uint64(0)
-            word = (bits << np.arange(64, dtype=np.uint64)).sum(dtype=np.uint64)
-            pv[w, :] = word
+            pv[w, :] = (bits << np.arange(64, dtype=np.uint64)).sum(dtype=np.uint64)
 
     def init_val(i_arr):
         if alpha is None:
@@ -515,7 +556,6 @@ def semiglobal_search(
     window_top = (hw + 1) * 64 - 1
     track_row = np.minimum(top_row, window_top)
     score = init_val(track_row + 1)
-    bi = np.arange(b)
 
     # streaming mode state
     hit_lane: list[np.ndarray] = []
@@ -529,170 +569,234 @@ def semiglobal_search(
         run_val = np.full(b, SENT, dtype=np.int64)
         before_run = np.full(b, SENT, dtype=np.int64)
 
-    # preallocated scratch (see banded_edit_distances for why: allocator
-    # churn is a cache hazard and, in this sandbox, a serialized-fault one)
-    eqw = np.empty(b, dtype=np.uint64)
-    xv = np.empty(b, dtype=np.uint64)
-    t1 = np.empty(b, dtype=np.uint64)
-    t2 = np.empty(b, dtype=np.uint64)
-    mh = np.empty(b, dtype=np.uint64)
-    hin_p = np.empty(b, dtype=np.uint64)
-    hin_m = np.empty(b, dtype=np.uint64)
-    hout_p = np.empty(b, dtype=np.uint64)
-    hout_m = np.empty(b, dtype=np.uint64)
-    flat = np.empty(b, dtype=np.int64)
-    base_idx = bi * np.int64(alphabet)
+    # preallocated scratch: fresh temporaries of block size would cost a
+    # page fault per page on every block. Each block works on [:n_live]
+    # views: per-lane rows of ``scratch`` and contiguous (blk, n_live)
+    # reshapes of the flat block buffers.
+    scratch = np.empty((9, b), dtype=np.uint64)
+    pbuf = np.empty(64 * b, dtype=np.uint64)  # ph word of the tracked row
+    mbuf = np.empty(64 * b, dtype=np.uint64)  # mh word of the tracked row
+    cbuf = np.empty(64 * b, dtype=tmat.dtype)  # block text symbols
+    fbuf = np.empty(64 * b, dtype=np.intp)  # peq row offset + symbol
+    pbit = np.empty(64 * b, dtype=bool)
+    mbit = np.empty(64 * b, dtype=bool)
+    dbuf = np.empty(64 * b, dtype=np.int8)  # row-m cost deltas
+    sbuf = np.empty(64 * b, dtype=np.int8)  # their running sums (|.| <= 64)
+    kbuf = np.empty(64 * b, dtype=np.int64)  # block costs
+    ebuf: list[np.ndarray] = []  # per window word: block peq words
 
     peq_cache: dict[int, np.ndarray] = {}
 
     def peq_word(w: int) -> np.ndarray:
         tbl = peq_cache.get(w)
         if tbl is None:
-            tbl = _peq_word(pmat, w, alphabet, compat)
+            tbl = _peq_word(pmat, w, alphabet, compat).reshape(-1)
             peq_cache[w] = tbl
         return tbl
 
-    # per-block row-m cost buffer: mode processing (all / best / minima
-    # plateau state machine) is vectorized per 64-column block, so the
-    # per-column Python overhead is just the word loop + one store
-    block_buf = np.full((b, 64), BIG, dtype=np.int64)
+    def view(buf):  # the current block's contiguous (blk, nl) view
+        return buf[: blk * nl].reshape(blk, nl)
+
     jb = 0
-    while jb < n_max:
-        if not bool((tlens > jb).any()):
-            break
+    n_live = b
+    while True:
         j_end = min(jb + 64, n_max)
         blk = j_end - jb
-        track_word = (track_row >> 6).astype(np.int64)
-        track_bit = (U1 << (track_row & 63).astype(np.uint64))
-        sel_by_word = {
-            w: track_word == w
+        nl = n_live
+        track_bit = U1 << (track_row[:nl] & 63).astype(np.uint64)
+        track_word = track_row[:nl] >> 6
+        tracked = np.unique(track_word).tolist()
+        # one tracked word: its ph/mh are written straight into the block
+        # buffers; several: each is masked to its lanes and OR-ed in
+        solo = tracked[0] if len(tracked) == 1 else -1
+        prow = view(pbuf)
+        mrow = view(mbuf)
+        tmask = {}
+        if solo < 0:
+            prow.fill(0)
+            mrow.fill(0)
+            tmask = {
+                w: np.where(track_word == w, track_bit, np.uint64(0))
+                for w in tracked
+            }
+        chars = view(cbuf)
+        np.take(tmat[jb:j_end], text_of[:nl], axis=1, out=chars, mode="clip")
+        flat = view(fbuf)
+        np.add(chars, pat_base[:nl], out=flat)
+        while len(ebuf) <= hw:
+            ebuf.append(np.empty(64 * b, dtype=np.uint64))
+        eqs = [
+            np.take(peq_word(w), flat, out=view(ebuf[w]), mode="clip")
             for w in range(hw + 1)
-            if bool((track_word == w).any())
-        }
-        # lanes whose window covers row m this block; others stay BIG
-        # (y < m there guarantees D[m][j] > k)
-        cov_idx = np.nonzero(track_row == top_row)[0]
-        block_buf[:, :blk] = BIG
-        for j in range(jb, j_end):
-            chars = tmat[j]
-            hin_p.fill(0)  # semiglobal: D[0][j] = 0 -> no +1 from the top
-            hin_m.fill(0)
+        ]
+        pvs = [pv[w, :nl] for w in range(hw + 1)]
+        mvs = [mv[w, :nl] for w in range(hw + 1)]
+        eqw, xv, t1, t2, mh_s, hin_p, hin_m, hout_p, hout_m = scratch[:, :nl]
+        # alpha: block column -> lanes whose text ends there
+        ends_at: dict[int, np.ndarray] = {}
+        over_min = []
+        if alpha is not None:
+            ending = np.nonzero(tlens[:nl] <= j_end)[0]
+            end_col = tlens[ending] - 1 - jb
+            for c in np.unique(end_col).tolist():
+                ends_at[c] = ending[end_col == c]
+        for c in range(blk):
+            pc = prow[c]
+            mc = mrow[c]
             for w in range(hw + 1):
-                pvw = pv[w]
-                mvw = mv[w]
-                np.add(base_idx, chars, out=flat)
-                np.take(peq_word(w).reshape(-1), flat, out=eqw)
-                np.bitwise_or(eqw, mvw, out=xv)
-                np.bitwise_or(eqw, hin_m, out=eqw)
-                np.bitwise_and(eqw, pvw, out=t1)
+                pvw = pvs[w]
+                mvw = mvs[w]
+                eq = eqs[w][c]
+                np.bitwise_or(eq, mvw, out=xv)
+                if w:  # word 0 has no carry in: semiglobal D[0][j] = 0
+                    np.bitwise_or(eq, hin_m, out=eqw)
+                    eq = eqw
+                np.bitwise_and(eq, pvw, out=t1)
                 np.add(t1, pvw, out=t1)
                 np.bitwise_xor(t1, pvw, out=t1)
-                np.bitwise_or(t1, eqw, out=t1)  # t1 = xh
+                np.bitwise_or(t1, eq, out=t1)  # t1 = xh
                 np.bitwise_or(t1, pvw, out=t2)
                 np.invert(t2, out=t2)
-                np.bitwise_or(mvw, t2, out=t2)  # t2 = ph
+                ph = pc if w == solo else t2
+                mh = mc if w == solo else mh_s
+                np.bitwise_or(mvw, t2, out=ph)  # ph
                 np.bitwise_and(pvw, t1, out=mh)  # mh
-                sel = sel_by_word.get(w)
-                if sel is not None:
-                    tb = track_bit[sel]
-                    score[sel] += ((t2[sel] & tb) != 0).astype(np.int64)
-                    score[sel] -= ((mh[sel] & tb) != 0).astype(np.int64)
-                np.right_shift(t2, U63, out=hout_p)
-                np.right_shift(mh, U63, out=hout_m)
-                np.left_shift(t2, U1, out=t2)
-                np.bitwise_or(t2, hin_p, out=t2)  # ph shifted
-                np.left_shift(mh, U1, out=mh)
-                np.bitwise_or(mh, hin_m, out=mh)  # mh shifted
-                np.bitwise_or(xv, t2, out=t1)
-                np.invert(t1, out=t1)
-                np.bitwise_or(mh, t1, out=pvw)  # pv[w] updated in place
+                tm = tmask.get(w)
+                if tm is not None:
+                    np.bitwise_and(ph, tm, out=t1)
+                    np.bitwise_or(pc, t1, out=pc)
+                    np.bitwise_and(mh, tm, out=t1)
+                    np.bitwise_or(mc, t1, out=mc)
+                if w < hw:
+                    np.right_shift(ph, U63, out=hout_p)
+                    np.right_shift(mh, U63, out=hout_m)
+                np.left_shift(ph, U1, out=t2)
+                np.left_shift(mh, U1, out=t1)
+                if w:
+                    np.bitwise_or(t2, hin_p, out=t2)  # ph shifted
+                    np.bitwise_or(t1, hin_m, out=t1)  # mh shifted
                 np.bitwise_and(t2, xv, out=mvw)  # mv[w] updated in place
+                np.bitwise_or(xv, t2, out=xv)
+                np.invert(xv, out=xv)
+                np.bitwise_or(t1, xv, out=pvw)  # pv[w] updated in place
                 hin_p, hout_p = hout_p, hin_p
                 hin_m, hout_m = hout_m, hin_m
-            block_buf[cov_idx, j - jb] = score[cov_idx]
 
-            if alpha is not None:
-                fin = tlens == j + 1
-                if fin.any():
-                    # right overhang: alignments ending at text end n may
-                    # leave a pattern suffix unmatched at floor(alpha*o)
-                    vals = _column_values(pv, mv, hw)  # (B, R): D[r+1][n]
-                    for li in np.nonzero(fin)[0]:
-                        m_i = int(mlens[li])
-                        r_hi = min(m_i - 1, vals.shape[1] - 1)
-                        dvals = np.concatenate(
-                            [np.zeros(1, dtype=np.int64), vals[li, : r_hi + 1]]
-                        )  # D[0..r_hi+1][n]
-                        over = m_i - np.arange(r_hi + 2, dtype=np.int64)
-                        cand = dvals + _overhang_penalty(over, alpha, mo)
-                        c = j - jb
-                        block_buf[li, c] = min(
-                            int(block_buf[li, c]), int(cand.min())
-                        )
+            fin = ends_at.get(c)
+            if fin is not None:
+                # right overhang: alignments ending at text end n may
+                # leave a pattern suffix unmatched at floor(alpha*o)
+                vals = _column_values(pv[:, fin], mv[:, fin], hw)  # D[r+1][n]
+                mins = np.empty(len(fin), dtype=np.int64)
+                for r, li in enumerate(fin.tolist()):
+                    m_i = int(mlens[li])
+                    r_hi = min(m_i - 1, vals.shape[1] - 1)
+                    dvals = np.concatenate(
+                        [np.zeros(1, dtype=np.int64), vals[r, : r_hi + 1]]
+                    )  # D[0..r_hi+1][n]
+                    over = m_i - np.arange(r_hi + 2, dtype=np.int64)
+                    mins[r] = (dvals + _overhang_penalty(over, alpha, mo)).min()
+                over_min.append((c, fin, mins))
 
-        # ---- vectorized per-block mode processing ----
-        buf = block_buf[:, :blk]
-        colsg = np.arange(jb, j_end, dtype=np.int64)
-        buf[colsg[None, :] >= tlens[:, None]] = BIG  # past text end
+        # ---- block costs: row-m scores by one cumsum over the tracked bits
+        np.bitwise_and(prow, track_bit, out=prow)
+        np.bitwise_and(mrow, track_bit, out=mrow)
+        np.not_equal(prow, 0, out=view(pbit))
+        np.not_equal(mrow, 0, out=view(mbit))
+        np.subtract(view(pbit), view(mbit), out=view(dbuf), dtype=np.int8)
+        run = np.cumsum(view(dbuf), axis=0, dtype=np.int8, out=view(sbuf))
+        buf = np.add(run, score[:nl], out=view(kbuf))  # (blk, nl)
+        score[:nl] = buf[-1]
+        # lanes whose window does not reach row m stay BIG (y < m there
+        # guarantees D[m][j] > k); so do columns past a lane's text end
+        short = track_row[:nl] != top_row[:nl]
+        if short.any():
+            buf[:, short] = BIG
+        n_full = int(np.count_nonzero(tlens[:nl] >= j_end))
+        if n_full < nl:
+            part = buf[:, n_full:]
+            part[np.arange(blk)[:, None] >= (tlens[n_full:nl] - jb)] = BIG
+        for c, fin, mins in over_min:
+            buf[c, fin] = np.minimum(buf[c, fin], mins)
+
+        # ---- per-block mode processing on (column, lane) costs ----
         if mode == "all":
-            hm = buf <= k
-            if hm.any():
-                li, ci = np.nonzero(hm)
+            ci, li = np.nonzero(buf <= k)
+            if len(li):
                 hit_lane.append(li)
-                hit_end.append(colsg[ci] + 1)
-                hit_cost.append(buf[li, ci])
+                hit_end.append(ci + (jb + 1))
+                hit_cost.append(buf[ci, li])
         elif mode == "best":
-            mn = buf.min(axis=1)
-            pos = blk - 1 - np.argmax((buf == mn[:, None])[:, ::-1], axis=1)
-            upd = (mn <= k) & (mn <= best_cost)
-            best_cost[upd] = mn[upd]
-            best_end[upd] = jb + pos[upd] + 1
+            mn = buf.min(axis=0)
+            upd = np.nonzero((mn <= k) & (mn <= best_cost[:nl]))[0]
+            if len(upd):
+                hot = buf[:, upd] == mn[upd]
+                pos = blk - 1 - np.argmax(hot[::-1], axis=0)
+                best_cost[upd] = mn[upd]
+                best_end[upd] = jb + pos + 1
         else:  # local_minima: plateau machine with 2-value carry state
-            # ext = [value-before-current-run, current-run-value, block...]
-            ext = np.concatenate(
-                [before_run[:, None], run_val[:, None], buf], axis=1
-            )
-            n_ = ext.shape[1]
-            idx2 = np.arange(n_)
-            new_run = np.ones((b, n_), dtype=bool)
-            new_run[:, 1:] = ext[:, 1:] != ext[:, :-1]
-            run_start = np.maximum.accumulate(
-                np.where(new_run, idx2[None, :], 0), axis=1
-            )
-            prev_val = np.where(
-                run_start > 0,
-                np.take_along_axis(ext, np.maximum(run_start - 1, 0), axis=1),
-                ext[:, :1] + 1,
-            )
-            # duplicate the last column: the final run carries into the
-            # next block (or the post-loop finalize), never emits here
-            nxt = np.concatenate([ext[:, 1:], ext[:, -1:]], axis=1)
-            cand = (ext <= k) & (ext < nxt) & (ext < prev_val)
-            cand[:, 0] = False  # context column, not a position
-            if cand.any():
-                li, pi = np.nonzero(cand)
-                hit_lane.append(li)
-                # ext index p maps to global column jb + p - 2 -> end jb+p-1
-                hit_end.append(jb + pi - 1)
-                hit_cost.append(ext[li, pi])
-            changes = ext[:, 1:] != ext[:, :-1]
-            anych = changes.any(axis=1)
-            lc = n_ - 1 - np.argmax(changes[:, ::-1], axis=1)  # final run start
-            bef = np.take_along_axis(
-                ext, np.maximum(lc - 1, 0)[:, None], axis=1
-            )[:, 0]
-            before_run = np.where(anych, bef, before_run)
-            run_val = ext[:, -1]
+            # only hot lanes can emit or change a state that is read: a
+            # lane whose block and carried run are all > k emits nothing,
+            # and its before_run is never read while its run_val > k
+            mn = buf.min(axis=0)
+            hot = np.nonzero((mn <= k) | (run_val[:nl] <= k))[0]
+            n_hot = len(hot)
+            # a lane that ended at the previous block end may still carry a
+            # run <= k; its block is all BIG
+            hot = np.concatenate([hot, nl + np.nonzero(run_val[nl:] <= k)[0]])
+            if len(hot):
+                # ext = [value-before-current-run, current-run-value, block...]
+                ext = np.full((len(hot), blk + 2), BIG, dtype=np.int64)
+                ext[:, 0] = before_run[hot]
+                ext[:, 1] = run_val[hot]
+                ext[:n_hot, 2:] = buf[:, hot[:n_hot]].T
+                n_ = ext.shape[1]
+                idx2 = np.arange(n_)
+                new_run = np.ones(ext.shape, dtype=bool)
+                new_run[:, 1:] = ext[:, 1:] != ext[:, :-1]
+                run_start = np.maximum.accumulate(
+                    np.where(new_run, idx2[None, :], 0), axis=1
+                )
+                prev_val = np.where(
+                    run_start > 0,
+                    np.take_along_axis(ext, np.maximum(run_start - 1, 0), axis=1),
+                    ext[:, :1] + 1,
+                )
+                # duplicate the last column: the final run carries into the
+                # next block (or the post-loop finalize), never emits here
+                nxt = np.concatenate([ext[:, 1:], ext[:, -1:]], axis=1)
+                cand = (ext <= k) & (ext < nxt) & (ext < prev_val)
+                cand[:, 0] = False  # context column, not a position
+                if cand.any():
+                    li, pi = np.nonzero(cand)
+                    hit_lane.append(hot[li])
+                    # ext index p maps to global column jb + p - 2 -> end jb+p-1
+                    hit_end.append(jb + pi - 1)
+                    hit_cost.append(ext[li, pi])
+                changes = ext[:, 1:] != ext[:, :-1]
+                anych = changes.any(axis=1)
+                lc = n_ - 1 - np.argmax(changes[:, ::-1], axis=1)  # final run start
+                bef = np.take_along_axis(
+                    ext, np.maximum(lc - 1, 0)[:, None], axis=1
+                )[:, 0]
+                before_run[hot] = np.where(anych, bef, before_run[hot])
+            run_val[:nl] = buf[-1]
+            run_val[nl:] = BIG
 
         jb = j_end
         if jb >= n_max:
             break
-        # block boundary: re-derive the exact active row per lane and
+        n_live = int(np.count_nonzero(tlens > jb))
+        if n_live == 0:
+            break
+        if w_count == 1:
+            continue  # a one-word window never moves
+        # block boundary: re-derive the exact active row per live lane and
         # shrink/grow the word window for the next 64 columns
-        live = tlens > jb
-        vals = _column_values(pv, mv, hw)  # (B, R)
+        nl = n_live
+        vals = _column_values(pv[:, :nl], mv[:, :nl], hw)  # (nl, R)
         rr = np.arange(vals.shape[1], dtype=np.int64)
-        okm = (vals <= k) & (rr[None, :] <= top_row[:, None]) & live[:, None]
+        okm = (vals <= k) & (rr[None, :] <= top_row[:nl, None])
         any_ok = okm.any(axis=1)
         y_bit = np.where(
             any_ok, vals.shape[1] - 1 - np.argmax(okm[:, ::-1], axis=1), -1
@@ -701,19 +805,16 @@ def semiglobal_search(
         if new_hw != hw:
             new_window_top = (new_hw + 1) * 64 - 1
             new_track = np.minimum(top_row, new_window_top)
+            moved = np.nonzero(new_track[:nl] != track_row[:nl])[0]
             if new_hw > hw:
                 # virgin/stale words above: reset to +1-per-row upper bound
                 pv[hw + 1 : new_hw + 1, :] = UFULL
                 mv[hw + 1 : new_hw + 1, :] = 0
                 grow = new_track > window_top
                 score = np.where(grow, score + (new_track - window_top), score)
-                within = ~grow & (new_track != track_row)
-                if within.any():
-                    score[within] = vals[bi[within], new_track[within]]
-            else:
-                moved = new_track != track_row
-                if moved.any():
-                    score[moved] = vals[bi[moved], new_track[moved]]
+                moved = moved[~grow[moved]]
+            if len(moved):
+                score[moved] = vals[moved, new_track[moved]]
             hw = new_hw
             window_top = new_window_top
             track_row = new_track

@@ -33,12 +33,14 @@ the text JVM-side (Catalyst ``lower()`` before the Arrow transfer — also
 shrinks the payload) and the patterns once on the driver. Lanes are
 chunked (``MAX_LANES`` = 4096 per kernel call) after length-sorting the
 batch, bounding worker memory at O(lanes x band) regardless of document
-length or pattern count.
+length or pattern count. Each chunk passes every text object once per
+pattern; the kernel sets up each distinct text once, stops scanning a
+lane when its text ends, and runs match selection only on lanes with a
+cost <= k in the current 64-column block or carried into it.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Callable, Iterator
 
 import numpy as np
@@ -57,7 +59,7 @@ MATCH_SCHEMA = (
 # pattern sources; a million-row patterns_df is a different query shape
 # (use linkage.score_pairs / a join) — fail fast instead of OOMing the
 # driver on collect()
-MAX_PATTERNS = int(os.environ.get("SASSY_MAX_PATTERNS", "100000"))
+MAX_PATTERNS = 100_000
 
 # (pattern x text) lanes per kernel call, bounding worker memory at
 # O(lanes x band words) whatever the document length or pattern count
@@ -119,7 +121,7 @@ def search(
             f"search(): > MAX_PATTERNS={MAX_PATTERNS} patterns; "
             "the broadcast-pattern plan is for small pattern sets — for "
             "large ones generate candidate pairs and use "
-            "linkage.score_pairs (or raise SASSY_MAX_PATTERNS)"
+            "linkage.score_pairs"
         )
     pats_local = [(str(r[0]), str(r[1]), "+") for r in pat_rows]
     if rc:

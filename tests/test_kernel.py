@@ -582,3 +582,65 @@ def test_banded_edit_distance_with_classes():
         classes=IUPAC_CLASSES,
     )
     assert got.tolist() == [1, 0, 0]
+
+
+def test_semiglobal_cross_product_batch_equals_singles():
+    """A pattern x text batch built the way the search runner builds it
+    (each text object shared by every pattern's lane) must give every lane
+    exactly what a single-lane call gives. Texts of 1-700 chars end in
+    different 64-column blocks; patterns of 1-140 chars make the word
+    window grow and shrink; one text has an equal-valued copy that is a
+    separate object."""
+    from sassy_spark.kernel.profiles import IUPAC_CLASSES
+
+    r = random.Random(7)
+
+    def rand(n, alpha):
+        return "".join(r.choice(alpha) for _ in range(n))
+
+    def batch(p_alpha, t_alpha):
+        pats = [rand(r.choice([1, 5, 30, 64, 65, 100, 140]), p_alpha)
+                for _ in range(4)]
+        texts = []
+        for n in (1, 63, 64, 129, 300, 700):
+            t = rand(n, t_alpha)
+            p = r.choice(pats)
+            if len(p) < n:  # plant a lightly edited occurrence
+                at = r.randrange(n - len(p) + 1)
+                occ = list(p)
+                for _ in range(r.randrange(3)):
+                    occ[r.randrange(len(occ))] = r.choice(t_alpha)
+                t = t[:at] + "".join(occ) + t[at + len(p):]
+            texts.append(t)
+        texts.append("".join(list(texts[4])))  # equal value, own object
+        return pats, texts
+
+    configs = [
+        (None, {}),
+        (IUPAC_CLASSES, {}),
+        (None, {"alpha": 0.5, "max_overhang": 3}),
+        (IUPAC_CLASSES, {"alpha": 1.0}),
+    ]
+    for trial, (classes, over) in enumerate(configs * 2):
+        p_alpha = "ACGTNRY" if classes else "ACGT"
+        pats, texts = batch(p_alpha, "ACGTacgt" if classes else "ACGT")
+        rep_p = [p for p in pats for _ in texts]
+        rep_t = texts * len(pats)
+        k = r.randrange(10)
+        for mode in ("all", "local_minima", "best"):
+            got = semiglobal_search(rep_p, rep_t, k, mode=mode,
+                                    classes=classes, **over)
+            assert len(got) == len(rep_p)
+            for lane, (p, t) in enumerate(zip(rep_p, rep_t)):
+                one = semiglobal_search([p], [t], k, mode=mode,
+                                        classes=classes, **over)[0]
+                ctx = (trial, mode, lane, k)
+                assert got[lane][0].dtype == np.int64, ctx
+                assert got[lane][1].dtype == np.int32, ctx
+                assert got[lane][0].tolist() == one[0].tolist(), ctx
+                assert got[lane][1].tolist() == one[1].tolist(), ctx
+                if mode == "all" and not classes and not over and len(t) <= 129:
+                    ref = semiglobal_costs(p, t)
+                    want = [(j + 1, c) for j, c in enumerate(ref) if c <= k]
+                    assert list(zip(got[lane][0].tolist(),
+                                    got[lane][1].tolist())) == want, ctx
